@@ -599,19 +599,28 @@ def etl_atomic_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged, promoted all-or-nothing, manifest returned. (Rows-only:
     the observable is the commit protocol, exercised end-to-end here
     and failure-tested in tests/test_io.py.)"""
+    import shutil
     import tempfile
 
     from proceso_de_etl_spark.sources.atomic import atomic_write_tables
 
     part = load_table(spark, sf_dir, "part")
     orders = load_table(spark, sf_dir, "orders")
-    dim_cat = extract_dimension(part, "p_type", "id_categoria", "categoria")
-    dim_pri = extract_dimension(orders, "o_orderpriority", "id_clasificacion", "clasificacion")
+    dims = {
+        "dim_categoria": extract_dimension(part, "p_type", "id_categoria", "categoria"),
+        "dim_clasificacion": extract_dimension(orders, "o_orderpriority", "id_clasificacion", "clasificacion"),
+    }
     root = tempfile.mkdtemp(prefix="atomic_load_")
-    atomic_write_tables(root, {"dim_categoria": dim_cat, "dim_clasificacion": dim_pri})
-    manifest = [
-        (name, spark.read.parquet(f"{root}/{name}").count()) for name in ("dim_categoria", "dim_clasificacion")
-    ]
+    try:
+        atomic_write_tables(root, dims)
+        # read back with the staged schemas: bare inference would cost
+        # one Spark job per table before the count runs
+        manifest = [
+            (name, spark.read.schema(df.schema).parquet(f"{root}/{name}").count()) for name, df in dims.items()
+        ]
+    finally:
+        # the manifest is local rows, so the committed dims can go
+        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(manifest, "table_name string, n_rows bigint")
 
 

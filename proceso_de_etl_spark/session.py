@@ -16,6 +16,16 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_mem() -> str:
+    """16g, or half the physical RAM of a smaller machine: a heap the
+    box cannot back gets the JVM killed instead of collected."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, half_mb)}m"
+
+
 def get_spark(app_name: str = "proceso_de_etl_spark", cpus: str | None = None) -> SparkSession:
     """Create (or fetch) the session.
 
@@ -55,7 +65,7 @@ def get_spark(app_name: str = "proceso_de_etl_spark", cpus: str | None = None) -
         # unreadable through the nanosAsLong long-path, and a trap for
         # any downstream engine reading this engine's output
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # stage progress bars corrupt captured stdout/stderr records
         # (the per-round driver keeps only a short tail of bench

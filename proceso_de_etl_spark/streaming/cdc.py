@@ -338,12 +338,18 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write cost ~0.65 s of pure fixed overhead per invocation
     # (profile_vault_ingest.py phase table) and epoch 1 then paid a
     # listing + scan + full_outer shuffle against a provably empty
-    # side; with a LocalRelation store AQE's empty-relation
-    # propagation collapses that first merge to a projection of the
-    # candidates. Store contents after epoch 1 are identical (merge
-    # with an empty store = the candidate rows), so the final state
-    # and its oracle are unchanged.
+    # side; with a LocalRelation store the batch optimizer's
+    # PropagateEmptyRelation collapses that first merge to a
+    # projection of the candidates (AQE is off inside micro-batches,
+    # so this is a static-plan rewrite). Store contents after epoch 1
+    # are identical (merge with an empty store = the candidate rows),
+    # so the final state and its oracle are unchanged.
     state: dict[str, str | None] = {"cur": None}
+
+    def read_store(sess: SparkSession) -> DataFrame:
+        if state["cur"] is None:
+            return sess.createDataFrame([], "vault_table string, hk bigint, hd bigint, load_epoch int")
+        return sess.read.parquet(state["cur"])
 
     stream = (
         spark.readStream.schema(INGEST_SCHEMA)
@@ -352,15 +358,8 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        if state["cur"] is None:
-            store = sess.createDataFrame(
-                [], "vault_table string, hk bigint, hd bigint, load_epoch int"
-            )
-        else:
-            store = sess.read.parquet(state["cur"])
         nxt = os.path.join(workdir, f"store_v{epoch_id + 1}")
-        merge_vault_batch(store, batch_df).write.mode("overwrite").parquet(nxt)
+        merge_vault_batch(read_store(batch_df.sparkSession), batch_df).write.mode("overwrite").parquet(nxt)
         state["cur"] = nxt  # pointer flip = atomic promote
 
     q = stream.writeStream.outputMode("update").foreachBatch(apply_batch).start()
@@ -369,8 +368,9 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
 
+    # no micro-batch fired (empty landing dir): report the empty store
     return (
-        spark.read.parquet(state["cur"])
+        read_store(spark)
         .groupBy("vault_table", "load_epoch")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),

@@ -1,9 +1,12 @@
 """Source/sink coverage (SURVEY.md §2.4): format roundtrips, schema'd
 reads, malformed-row policies, partitioned writes with pruning."""
 
+import shutil
+
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.io import (
@@ -14,7 +17,7 @@ from proceso_de_etl_spark.sources.io import (
     write_orc,
     write_parquet,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs_of
 
 
 def _sample(spark):
@@ -184,6 +187,43 @@ def test_load_table_fails_fast_with_actionable_errors(spark):
         load_table(spark, SF_SMOKE, "bogus")
     with pytest.raises(AnalysisException):
         load_table(spark, "/root/testdata/does_not_exist", "orders")
+
+
+def test_load_table_reuses_cached_schema_without_jobs(spark):
+    """A repeat load of an unchanged path plans from the cached schema:
+    no schema-inference job runs, and the schema equals a fresh
+    inference of the same file."""
+    load_table(spark, SF_SMOKE, "orders")
+    df, jobs = spark_jobs_of(spark, lambda: load_table(spark, SF_SMOKE, "orders"))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(f"{SF_SMOKE}/orders.parquet").schema
+
+
+def test_load_table_reinfers_a_rewritten_path(spark, tmp_path):
+    """Overwriting a table with a different schema invalidates the
+    cached one: the next load shows the new column."""
+    path = str(tmp_path / "region.parquet")
+    spark.range(3).withColumnRenamed("id", "r_regionkey").write.parquet(path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    spark.range(3).select(
+        F.col("id").alias("r_regionkey"), F.lit("x").alias("r_name")
+    ).write.mode("overwrite").parquet(path)
+    back = load_table(spark, str(tmp_path), "region")
+    assert back.columns == ["r_regionkey", "r_name"]
+    assert {r.r_name for r in back.collect()} == {"x"}
+
+
+def test_load_table_normalizes_events_ts_on_cached_path(spark, tmp_path):
+    """events.ts lands as a UTC instant both when the schema is
+    inferred (first call on a new path) and when it comes from the
+    cache (second call, no job)."""
+    shutil.copyfile(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
+    first, first_jobs = spark_jobs_of(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    cached, cached_jobs = spark_jobs_of(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert first_jobs > 0 and cached_jobs == 0
+    assert isinstance(first.schema["ts"].dataType, T.TimestampType)
+    assert isinstance(cached.schema["ts"].dataType, T.TimestampType)
+    assert first.agg(F.max("ts")).first()[0] == cached.agg(F.max("ts")).first()[0]
 
 
 def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tmp_path):

@@ -450,6 +450,22 @@ def test_atomic_commit_stamps_txn_id(spark, tmp_path):
     # metadata to Spark's file index)
     assert spark.read.parquet(f"{root}/t1").count() == 1
 
+
+def test_etl_atomic_write_removes_its_load_root(spark, tmp_path, monkeypatch):
+    """The manifest is local rows, so the committed dims are deleted
+    once counted: repeated loads leave no directory behind."""
+    import tempfile
+
+    from proceso_de_etl_spark.operators.etl import etl_atomic_write
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    manifest = dict(etl_atomic_write(spark, SF_SMOKE).collect())
+    assert set(manifest) == {"dim_categoria", "dim_clasificacion"}
+    assert min(manifest.values()) > 0
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_incremental_minhash_matches_exact_cross_twin(spark):
     """Incremental near-dup: the banded batch-vs-corpus path must
     find exactly the cross-split pairs the exact Jaccard twin finds

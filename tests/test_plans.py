@@ -3,11 +3,13 @@ plans we designed — pushdown reaching parquet, dims broadcast, no
 accidental row-at-a-time Python in JVM-able paths.
 """
 
+import functools
+
 import pytest
 
 import __spark_entry__ as entrymod
 from proceso_de_etl_spark.plans import tpch
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, spark_jobs_of
 
 
 def plan_of(df) -> str:
@@ -165,6 +167,20 @@ def test_bloom_filter_prunes_semi_join_probe(spark):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_tpch_plans_build_without_spark_jobs(spark):
+    """Building a plan is pure planning: once a table's schema is
+    cached, the interactive TPC-H query functions launch no Spark job before
+    the caller executes the result."""
+    queries = entrymod.queries()
+    jobs = {}
+    for name in ("q3_shipping_priority", "q5_local_supplier", "q6_forecast_revenue",
+                 "q14_promo_effect", "q18_large_orders"):
+        build = functools.partial(queries[name], spark, SF_CORRECT)
+        build()
+        jobs[name] = spark_jobs_of(spark, build)[1]
+    assert jobs == dict.fromkeys(jobs, 0)
 
 
 def test_q1_partial_aggregation_and_codegen(spark):
